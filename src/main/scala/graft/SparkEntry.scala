@@ -1616,14 +1616,21 @@ object SparkEntry {
       import graft.store.PairCommit
       val st = freshStore(s)
       st.bulkLoad(corpusEntries(s, d, "000001", "000050")) // v1
-      val root = scratch("s26-pair")
-      graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(root))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-      val m1 = PairCommit.init(s, root, st, 8)
+      val live = scratch("s26-pair")
+      graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(live))
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(live))
+      val m1 = PairCommit.init(s, live, st, 8)
       require(m1 == PairCommit.Manifest(1L, 1L), s"unexpected init manifest: $m1")
       st.partialUpdate("000010", Map("title" -> "rev-b"))  // v2
-      // CRASH injected between generation publish and manifest swap
-      PairCommit.advance(s, root, st, 8, crashBeforeSwap = true)
+      // CRASH injected between generation publish and manifest swap: the
+      // pair root is copied at that step and the script goes on with the
+      // copy; the advance completed on the original is abandoned
+      val root = scratch("s26-pair-crashed")
+      graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(root))
+      graft.store.Commit.crashCopy(java.nio.file.Paths.get(live),
+          java.nio.file.Paths.get(root), "write MANIFEST") {
+        PairCommit.advance(s, live, st, 8)
+      }
       require(PairCommit.manifest(root) == m1, "torn advance must be invisible")
       require(PairCommit.readHistory(s, root)
         .where(col("valid_to").isNotNull).count() == 0L,
@@ -1690,33 +1697,40 @@ object SparkEntry {
       import graft.store.PairCommit
       val st = freshStore(s)
       st.bulkLoad(corpusEntries(s, d, "000001", "000050")) // v1
-      val root = scratch("s27-pair")
-      graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(root))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-      PairCommit.init(s, root, st, 8)                      // gen-1
+      val live = scratch("s27-pair")
+      graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(live))
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(live))
+      PairCommit.init(s, live, st, 8)                      // gen-1
       st.partialUpdate("000010", Map("title" -> "rev-b"))  // v2
-      PairCommit.advance(s, root, st, 8)                   // gen-2
+      PairCommit.advance(s, live, st, 8)                   // gen-2
       st.delete("000020")                                  // v3
-      PairCommit.advance(s, root, st, 8)                   // gen-3
+      PairCommit.advance(s, live, st, 8)                   // gen-3
       corpusEntries(s, d, "000200", "000200").collect().foreach(st.upsert) // v4
-      PairCommit.advance(s, root, st, 8)                   // gen-4
+      PairCommit.advance(s, live, st, 8)                   // gen-4
       st.partialUpdate("000030", Map("title" -> "rev-c"))  // v5
-      PairCommit.advance(s, root, st, 8)                   // gen-5
+      PairCommit.advance(s, live, st, 8)                   // gen-5
       st.partialUpdate("000030", Map("title" -> "rev-d"))  // v6
-      val m6 = PairCommit.advance(s, root, st, 8)          // gen-6
+      val m6 = PairCommit.advance(s, live, st, 8)          // gen-6
       require(m6 == PairCommit.Manifest(6L, 6L), s"unexpected manifest: $m6")
+      // materialize the pre-rebase resolution: its plan names gen dirs
+      // the sweep is about to delete, so it cannot be re-run afterwards
+      val beforeRows = PairCommit.readHistory(s, live)
+        .select(col("id"), col("title"), col("valid_from"), col("valid_to"))
+        .orderBy("id", "valid_from").collect().toSeq
+      val bytesBefore = graft.util.FsUtil.sizeOf(java.nio.file.Paths.get(live, "hist"))
+      // CRASH between the subsuming-generation publish and the swap:
+      // manifest-invisible, exactly one orphan, the redo converges. The
+      // pair root is copied at that step and the script goes on with the
+      // copy; the rebase completed on the original is abandoned
+      val root = scratch("s27-pair-crashed")
+      graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(root))
+      graft.store.Commit.crashCopy(java.nio.file.Paths.get(live),
+          java.nio.file.Paths.get(root), "write MANIFEST") {
+        PairCommit.rebase(s, live, 8)
+      }
       val hd = java.nio.file.Paths.get(root, "hist")
       def gens(): Seq[String] = graft.util.FsUtil.listDir(hd)(
         _.map(_.getFileName.toString).filter(_.startsWith("gen-")).toSeq.sorted)
-      // materialize the pre-rebase resolution: its plan names gen dirs
-      // the sweep is about to delete, so it cannot be re-run afterwards
-      val beforeRows = PairCommit.readHistory(s, root)
-        .select(col("id"), col("title"), col("valid_from"), col("valid_to"))
-        .orderBy("id", "valid_from").collect().toSeq
-      val bytesBefore = graft.util.FsUtil.sizeOf(hd)
-      // CRASH between the subsuming-generation publish and the swap:
-      // manifest-invisible, exactly one orphan, the redo converges
-      PairCommit.rebase(s, root, 8, crashBeforeSwap = true)
       require(PairCommit.manifest(root) == m6, "torn rebase must be invisible")
       require(PairCommit.heal(root) == 1L, "expected exactly one orphan generation")
       val m7 = PairCommit.rebase(s, root, 8)

@@ -105,15 +105,7 @@ class MetadataStore(spark: SparkSession, rootDir: String,
   /** Atomic pointer swap — commit point of every mutation. Only called with
     * the root lock held and v > currentVersion (see [[claimAndCommit]]).
     */
-  private def commit(v: Long): Unit = atomicWrite(root.resolve("CURRENT"), v.toString)
-
-  private def atomicWrite(target: Path, content: String): Unit = {
-    val tmp = root.resolve(s".${target.getFileName}.tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def commit(v: Long): Unit = Commit.writeAtomically(root.resolve("CURRENT"), v.toString)
 
   /** Cross-instance critical section: a JVM-wide monitor for instances in
     * this process (java.nio FileLocks are held per-process — a second
@@ -148,9 +140,9 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * when the version was taken first.
     */
   private def claimAndCommit(staging: Path, kind: String, v: Long,
-                             fresh: => Boolean = true): Boolean = withRootLock {
-    if (claimable(v) && fresh) {
-      publish(staging, s"$kind-$v")
+                             fresh: Long => Boolean): Boolean = withRootLock {
+    if (claimable(v) && fresh(v)) {
+      Commit.promote(staging, root.resolve(s"$kind-$v"))
       if (currentVersion < v) commit(v)
       true
     } else false
@@ -166,13 +158,35 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     math.max(currentVersion, maxSeg) + 1
   }
 
-  /** Publish a staged segment directory: atomic rename into its final name.
-    * Combined with [[nextVersion]], a segment is either fully present under
-    * its committed name or invisible — readers never see partial writes.
+  /** The optimistic stage → claim → publish → pointer-swap loop behind every
+    * segment-writing mutation. Each attempt stages under a unique hidden
+    * name at the next free version — OUTSIDE the lock, the expensive part —
+    * then [[claimAndCommit]] publishes it with one atomic rename (a segment
+    * is either fully present under its committed name or invisible) and
+    * advances CURRENT. If another instance on the same root claimed the
+    * version first, or `fresh` rejects the commit, the stage is discarded and
+    * the loop re-stages under a fresh version: concurrent writers all
+    * succeed (the reference tolerates concurrent index creation,
+    * app.py:101-109) and no mutation is ever silently lost. `stage` returns
+    * false to abort with nothing committed. Any exit that did not commit —
+    * abort, lost claim, or an exception from the stage — removes the staging
+    * directory. Returns whether a segment was committed.
     */
-  private def publish(staging: Path, finalName: String): Unit = {
-    Files.move(staging, root.resolve(finalName), StandardCopyOption.ATOMIC_MOVE)
-    ()
+  private def commitSegment(kind: String, fresh: Long => Boolean = _ => true)(
+      stage: (Path, Long) => Boolean): Boolean = {
+    var committed = false
+    while (!committed) {
+      val v = nextVersion
+      val staging = root.resolve(
+        s".staging-$kind-$v-${java.util.UUID.randomUUID.toString.take(8)}")
+      try {
+        if (!stage(staging, v)) return false
+        committed = claimAndCommit(staging, kind, v, fresh)
+      } finally {
+        if (!committed) graft.util.FsUtil.deleteRecursively(staging)
+      }
+    }
+    true
   }
 
   private def listVersions(prefix: String): Seq[Long] =
@@ -401,28 +415,19 @@ class MetadataStore(spark: SparkSession, rootDir: String,
   def upsertIf(entry: MetadataEntry, expectedVersion: Option[Long]): Boolean =
     this.synchronized {
       val normalized = Validation.normalize(entry, clock)
-      var outcome: Option[Boolean] = None
-      while (outcome.isEmpty) {
-        if (versionOf(entry.id) != expectedVersion) outcome = Some(false)
-        else {
-          val v = nextVersion
-          val staging = root.resolve(
-            s".staging-delta-$v-${java.util.UUID.randomUUID.toString.take(8)}")
-          // driver-side stage (one entry — see writeDelta); protocol unchanged
+      def unchanged = versionOf(entry.id) == expectedVersion
+      var restage = false
+      unchanged && commitSegment("delta", _ => unchanged) { (staging, v) =>
+        // a lost claim re-stages; if it was lost because THIS id changed,
+        // the re-stage's check returns false
+        (!restage || unchanged) && {
+          restage = true
+          // driver-side stage (one entry — see writeDelta)
           DirectParquet.writeRows(spark, staging, deltaSchema,
             Seq(deltaRow(normalized, v, "upsert")))
-          if (claimAndCommit(staging, "delta", v,
-              fresh = versionOf(entry.id) == expectedVersion))
-            outcome = Some(true)
-          else {
-            graft.util.FsUtil.deleteRecursively(staging)
-            // either the version was claimed by an unrelated writer
-            // (loop: re-stage fresh) or this id changed underneath us
-            // (the next pre-check returns false)
-          }
+          true
         }
       }
-      outcome.get
     }
 
   /** Batch upsert: validate + normalize every entry, then write ONE delta
@@ -477,39 +482,23 @@ class MetadataStore(spark: SparkSession, rootDir: String,
       .observe(audit,
         sum(when(!Validation.validColumn, 1L).otherwise(0L)).as("invalid"),
         count(lit(1)).as("rows"))
-    var committed = false
-    while (!committed) {
-      val v = nextVersion
-      val staging = root.resolve(
-        s".staging-delta-$v-${java.util.UUID.randomUUID.toString.take(8)}")
-      // Staging lifetime is bounded by the finally: ANY exit that did not
-      // commit — invalid batch, empty batch, lost CAS, or an executor/
-      // serialization failure thrown by the write or audit.get — removes the
-      // .staging-delta-* directory before the exception (or return)
-      // propagates. deleteRecursively no-ops on a missing path, so the
-      // empty-batch return path is safe to route through it too.
-      try {
-        deduped.withColumn(VersionCol, lit(v)).withColumn(OpCol, lit("upsert"))
-          .write.mode("overwrite").parquet(staging.toString)
-        // Observation latches the FIRST action's metrics — validity and count
-        // are content-based, so a CAS-retry re-write needs no re-audit. `get`
-        // blocks until the (already-finished) write's metrics are delivered.
-        val metrics = audit.get
-        def metricLong(name: String): Long = metrics.get(name) match {
-          case Some(n: Number) => n.longValue // sum over an empty batch is null
-          case _ => 0L
-        }
-        val invalid = metricLong("invalid")
-        val rows = metricLong("rows")
-        if (invalid > 0)
-          throw new IllegalArgumentException(
-            s"upsertAll batch rejected: $invalid invalid entr${if (invalid == 1) "y" else "ies"} " +
-              "(required fields empty, negative counts, or malformed targetUri) — nothing committed")
-        if (rows == 0L) return
-        committed = claimAndCommit(staging, "delta", v)
-      } finally {
-        if (!committed) graft.util.FsUtil.deleteRecursively(staging)
+    commitSegment("delta") { (staging, v) =>
+      deduped.withColumn(VersionCol, lit(v)).withColumn(OpCol, lit("upsert"))
+        .write.mode("overwrite").parquet(staging.toString)
+      // Observation latches the FIRST action's metrics — validity and count
+      // are content-based, so a CAS-retry re-write needs no re-audit. `get`
+      // blocks until the (already-finished) write's metrics are delivered.
+      val metrics = audit.get
+      def metricLong(name: String): Long = metrics.get(name) match {
+        case Some(n: Number) => n.longValue // sum over an empty batch is null
+        case _ => 0L
       }
+      val invalid = metricLong("invalid")
+      if (invalid > 0)
+        throw new IllegalArgumentException(
+          s"upsertAll batch rejected: $invalid invalid entr${if (invalid == 1) "y" else "ies"} " +
+            "(required fields empty, negative counts, or malformed targetUri) — nothing committed")
+      metricLong("rows") > 0L
     }
   }
 
@@ -609,32 +598,23 @@ class MetadataStore(spark: SparkSession, rootDir: String,
         sum(when(col(OpCol) === "upsert" && !Validation.validColumn, 1L)
           .otherwise(0L)).as("invalid"))
     try {
-      var committed = false
       var stats: MetadataStore.MergeStats = null
-      while (!committed) {
-        val v = nextVersion
-        val staging = root.resolve(
-          s".staging-delta-$v-${java.util.UUID.randomUUID.toString.take(8)}")
-        try {
-          all.drop("_arm").withColumn(VersionCol, lit(v))
-            .write.mode("overwrite").parquet(staging.toString)
-          // metrics latch on the FIRST action; a CAS-retry re-write (only
-          // the version literal changes) needs no re-audit
-          val m = audit.get
-          def mLong(name: String): Long = m.get(name) match {
-            case Some(n: Number) => n.longValue
-            case _ => 0L
-          }
-          val invalid = mLong("invalid")
-          require(invalid == 0L,
-            s"merge rejected: $invalid invalid merged row(s) — nothing committed")
-          stats = MetadataStore.MergeStats(
-            mLong("inserted"), mLong("updated"), mLong("deleted"))
-          if (stats.inserted + stats.updated + stats.deleted == 0L) return stats
-          committed = claimAndCommit(staging, "delta", v)
-        } finally {
-          if (!committed) graft.util.FsUtil.deleteRecursively(staging)
+      commitSegment("delta") { (staging, v) =>
+        all.drop("_arm").withColumn(VersionCol, lit(v))
+          .write.mode("overwrite").parquet(staging.toString)
+        // metrics latch on the FIRST action; a CAS-retry re-write (only
+        // the version literal changes) needs no re-audit
+        val m = audit.get
+        def mLong(name: String): Long = m.get(name) match {
+          case Some(n: Number) => n.longValue
+          case _ => 0L
         }
+        val invalid = mLong("invalid")
+        require(invalid == 0L,
+          s"merge rejected: $invalid invalid merged row(s) — nothing committed")
+        stats = MetadataStore.MergeStats(
+          mLong("inserted"), mLong("updated"), mLong("deleted"))
+        stats.inserted + stats.updated + stats.deleted > 0L
       }
       stats
     } finally {
@@ -703,15 +683,10 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * rows, so an incremental CDC replay across it would diverge).
     */
   def drop(): Unit = this.synchronized {
-    var committed = false
-    while (!committed) {
-      val v = nextVersion
-      val staging = root.resolve(
-        s".staging-base-$v-${java.util.UUID.randomUUID.toString.take(8)}")
+    commitSegment("base") { (staging, _) =>
       current.limit(0).toDF().write.mode("overwrite").parquet(staging.toString)
       Files.writeString(staging.resolve(TruncateMarker), "truncated")
-      committed = claimAndCommit(staging, "base", v)
-      if (!committed) graft.util.FsUtil.deleteRecursively(staging)
+      true
     }
   }
 
@@ -853,11 +828,14 @@ class MetadataStore(spark: SparkSession, rootDir: String,
             (listVersions("base-").map(b => s"base-$b" -> b) ++
               listVersions("delta-").map(d => s"delta-$d" -> d))
               .filter(_._2 < anchor)
+          // the floor moves BEFORE any segment goes: a crash mid-delete
+          // then leaves time travel below the anchor throwing, never
+          // silently resolving a partly deleted log
+          if (anchor > retentionFloor)
+            Commit.writeAtomically(root.resolve(VacuumFloorFile), anchor.toString)
           doomed.foreach { case (name, _) =>
             graft.util.FsUtil.deleteRecursively(root.resolve(name))
           }
-          if (anchor > retentionFloor)
-            atomicWrite(root.resolve(VacuumFloorFile), anchor.toString)
           doomed.map(_._2).sorted
       }
     }
@@ -876,11 +854,11 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * rewritten; a bucketed base is touched per `_bucket=` subdirectory
     * (only the ids' buckets — the cold directories keep their files).
     * Each rewrite stages survivors to a hidden sibling and swaps with two
-    * atomic renames; a crash between them leaves a `.redact-old-*`
-    * remnant that the next [[redactIds]] call (or construction-time read,
-    * which never sees hidden names) HEALS by restoring the original —
-    * redaction re-run then completes the job. Single-writer maintenance
-    * op, serialized against commits by the root lock.
+    * atomic renames; a crash between them leaves the segment only under a
+    * hidden `.redact-old-*` name. Nothing heals that at construction: until
+    * the next [[redactIds]] call restores the original (the re-run then
+    * completes the job), reads miss the segment's rows. Single-writer
+    * maintenance op, serialized against commits by the root lock.
     *
     * Replica contract: feeds replayed AFTER redaction never mention the
     * ids; a replica that already applied earlier windows holds its own
@@ -899,8 +877,8 @@ class MetadataStore(spark: SparkSession, rootDir: String,
       def swap(dirRel: String, tmp: Path): Unit = {
         val dir = root.resolve(dirRel.replace("__", "/"))
         val old = root.resolve(s".redact-old-$dirRel")
-        Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+        Commit.promote(dir, old)
+        Commit.promote(tmp, dir)
         graft.util.FsUtil.deleteRecursively(old)
       }
       def rewrite(dirRel: String, schema: org.apache.spark.sql.types.StructType): Unit = {
@@ -959,7 +937,7 @@ class MetadataStore(spark: SparkSession, rootDir: String,
       else if (n.startsWith(".redact-old-")) {
         val target = root.resolve(n.stripPrefix(".redact-old-").replace("__", "/"))
         if (Files.exists(target)) graft.util.FsUtil.deleteRecursively(root.resolve(n))
-        else Files.move(root.resolve(n), target, StandardCopyOption.ATOMIC_MOVE)
+        else Commit.promote(root.resolve(n), target)
       }
     }
   }
@@ -987,35 +965,26 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * just requires one recompaction).
     */
   def compact(): Unit = this.synchronized {
-    var committed = false
-    while (!committed) {
-      // A base SHADOWS every older segment, so — unlike a delta — it may
-      // only commit if NOTHING landed after its snapshot: true compare-and-
-      // swap. The snapshot folds in every published segment (committed or
-      // not: a published-but-unpointed orphan from a crashed writer is
-      // complete data — publication is the durability point, the pointer the
-      // visibility point — and our commit would adopt it into the read
-      // window, so shadowing it without folding it would lose the write).
-      val snapV = math.max(currentVersion,
-        (listVersions("base-") ++ listVersions("delta-")).maxOption.getOrElse(0L))
-      val v = snapV + 1
-      val snap = resolved(None, None, Some(snapV))
-      val staging = root.resolve(
-        s".staging-base-$v-${java.util.UUID.randomUUID.toString.take(8)}")
+    // A base SHADOWS every older segment, so — unlike a delta — it may only
+    // commit if NOTHING landed after its snapshot (nextVersion is still v):
+    // true compare-and-swap. The snapshot at v − 1, the newest version on
+    // disk, folds in every published segment (committed or not: a
+    // published-but-unpointed orphan from a crashed writer is complete data —
+    // publication is the durability point, the pointer the visibility point —
+    // and our commit would adopt it into the read window, so shadowing it
+    // without folding it would lose the write).
+    commitSegment("base", v => nextVersion == v) { (staging, v) =>
+      val snap = resolved(None, None, Some(v - 1))
       if (numBuckets > 0) {
         snap.withColumn(BucketCol, pmod(xxhash64(col("id")), lit(numBuckets.toLong)).cast("int"))
           .write.partitionBy(BucketCol).mode("overwrite").parquet(staging.toString)
         // self-describing layout: the modulus travels INSIDE the staged dir, so
-        // the atomic publish below makes data + sidecar visible together —
-        // reads prune with the WRITTEN bucket count, whatever this store is
+        // the atomic publish makes data + sidecar visible together — reads
+        // prune with the WRITTEN bucket count, whatever this store is
         // constructed with later
         Files.writeString(staging.resolve(BucketCountFile), numBuckets.toString)
-        ()
       } else snap.write.mode("overwrite").parquet(staging.toString)
-      committed = claimAndCommit(staging, "base", v,
-        fresh = currentVersion <= snapV &&
-          (listVersions("base-") ++ listVersions("delta-")).maxOption.getOrElse(0L) <= snapV)
-      if (!committed) graft.util.FsUtil.deleteRecursively(staging)
+      true
     }
   }
 
@@ -1033,47 +1002,24 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * "driver gap" that dominated every store scenario). The staged file
     * is produced by Spark's own ParquetWriteSupport under the session
     * conf (byte-compatible with the executor write path — see
-    * [[DirectParquet]]); the optimistic stage → claim → atomic publish →
-    * pointer-swap protocol around it is IDENTICAL to [[writeDeltaDF]]'s.
+    * [[DirectParquet]]); the commit protocol around it is [[commitSegment]],
+    * as for every other mutation.
     * Corpus-scale mutations keep their executor-side writes ([[bulkLoad]],
     * the Dataset [[upsertAll]], [[merge]]).
     */
   private def writeDelta(entries: Seq[MetadataEntry], op: String): Unit = this.synchronized {
-    var committed = false
-    while (!committed) {
-      val v = nextVersion
-      val staging = root.resolve(
-        s".staging-delta-$v-${java.util.UUID.randomUUID.toString.take(8)}")
-      try {
-        DirectParquet.writeRows(spark, staging, deltaSchema,
-          entries.map(deltaRow(_, v, op)))
-        committed = claimAndCommit(staging, "delta", v)
-      } finally {
-        if (!committed) graft.util.FsUtil.deleteRecursively(staging)
-      }
+    commitSegment("delta") { (staging, v) =>
+      DirectParquet.writeRows(spark, staging, deltaSchema, entries.map(deltaRow(_, v, op)))
+      true
     }
   }
 
-  /** Executor-side delta write — bulk loads never pass through the driver.
-    *
-    * Optimistic cross-instance concurrency: the delta stages under a unique
-    * name OUTSIDE the lock (the expensive part), then publish + pointer
-    * advance run as one short critical section ([[claimAndCommit]]). If
-    * another store instance on the same root claimed the version first, the
-    * stage is discarded and re-written under a fresh version — concurrent
-    * writers all succeed (the reference tolerates concurrent index
-    * creation, app.py:101-109) and no mutation is ever silently lost.
-    */
+  /** Executor-side delta write — bulk loads never pass through the driver. */
   private def writeDeltaDF(df: DataFrame, op: String): Unit = this.synchronized {
-    var committed = false
-    while (!committed) {
-      val v = nextVersion
-      val staging = root.resolve(
-        s".staging-delta-$v-${java.util.UUID.randomUUID.toString.take(8)}")
+    commitSegment("delta") { (staging, v) =>
       df.withColumn(VersionCol, lit(v)).withColumn(OpCol, lit(op))
         .write.mode("overwrite").parquet(staging.toString)
-      committed = claimAndCommit(staging, "delta", v)
-      if (!committed) graft.util.FsUtil.deleteRecursively(staging)
+      true
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,20 +70,8 @@ object PairCommit {
   }
 
   /** Atomic manifest swap — the commit point of the pair. */
-  private def swapManifest(root: String, m: Manifest): Unit = {
-    val tmp = Paths.get(root, ".MANIFEST.tmp")
-    Files.writeString(tmp, s"${m.storeVersion} ${m.histGen}")
-    Files.move(tmp, manifestPath(root), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  /** Stage a directory's final rename — the publish half of the two-rename
-    * discipline. */
-  private def publish(staging: Path, target: Path): Unit = {
-    Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+  private def swapManifest(root: String, m: Manifest): Unit =
+    Commit.writeAtomically(manifestPath(root), s"${m.storeVersion} ${m.histGen}")
 
   private def listGens(root: String): Seq[Long] =
     graft.util.FsUtil.listDir(histDir(root))(_.map(_.getFileName.toString)
@@ -106,7 +94,7 @@ object PairCommit {
     val staging = histDir(root).resolve(".gen-1.staging")
     graft.util.FsUtil.deleteRecursively(staging)
     MetadataStore.writeHistory(store.history(), nBuckets, staging.toString)
-    publish(staging, genPath(root, 1L))
+    Commit.promote(staging, genPath(root, 1L))
     val m = Manifest(v, 1L)
     swapManifest(root, m)
     m
@@ -114,12 +102,11 @@ object PairCommit {
 
   /** Advance the pair to the store's committed version: stage + publish
     * the touched-bucket fold as the next generation, then swap the
-    * manifest. `crashBeforeSwap` stops between publish and swap — the
-    * scripted-crash hook (s26): the orphan generation is manifest-
-    * invisible and the returned manifest is the UNCHANGED old one.
+    * manifest. A crash between publish and swap leaves an orphan
+    * generation the manifest never names (s26 scripts it).
     */
   def advance(spark: SparkSession, root: String, store: MetadataStore,
-              nBuckets: Int, crashBeforeSwap: Boolean = false): Manifest = {
+              nBuckets: Int): Manifest = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
     val m = manifest(root)
     val v = store.committedVersion
@@ -145,9 +132,8 @@ object PairCommit {
       // without committing it — manifest-invisible, so replacing it IS
       // the redo (explicit heal() remains available but is not required)
       graft.util.FsUtil.deleteRecursively(genPath(root, g))
-      publish(staging, genPath(root, g))
+      Commit.promote(staging, genPath(root, g))
     }
-    if (crashBeforeSwap) return m
     val next = Manifest(v, if (touched.nonEmpty) g else m.histGen)
     swapManifest(root, next)
     next
@@ -169,16 +155,15 @@ object PairCommit {
     *
     * Crash windows (the 5528a redo discipline, same as [[advance]]):
     * a crash during staging leaves a `.gen-*.staging` dir [[heal]] sweeps;
-    * a crash after publish but before the swap (the `crashBeforeSwap`
-    * hook) leaves an orphan generation ABOVE the manifest — invisible to
-    * every reader, healed as one orphan, and the redone re-base replaces
-    * it idempotently; a crash after the swap but before the sweep leaves
+    * a crash after publish but before the swap leaves an orphan
+    * generation ABOVE the manifest — invisible to every reader, healed as
+    * one orphan, and the redone re-base replaces it idempotently; a crash
+    * after the swap but before the sweep leaves
     * subsumed OLDER generations on disk — reads are already correct (the
     * new full generation shadows every bucket) and the next
     * [[sweepSubsumed]] (or re-base) reclaims them.
     */
-  def rebase(spark: SparkSession, root: String, nBuckets: Int,
-             crashBeforeSwap: Boolean = false): Manifest = {
+  def rebase(spark: SparkSession, root: String, nBuckets: Int): Manifest = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
     val m = manifest(root)
     val g = m.histGen + 1
@@ -187,8 +172,7 @@ object PairCommit {
     graft.util.FsUtil.deleteRecursively(staging)
     MetadataStore.writeHistory(full, nBuckets, staging.toString)
     graft.util.FsUtil.deleteRecursively(genPath(root, g)) // crashed-redo replace
-    publish(staging, genPath(root, g))
-    if (crashBeforeSwap) return m
+    Commit.promote(staging, genPath(root, g))
     val next = Manifest(m.storeVersion, g)
     swapManifest(root, next)
     sweepSubsumed(root)

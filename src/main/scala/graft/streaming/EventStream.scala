@@ -1040,48 +1040,9 @@ object EventStream {
     * checkpoint offset. Returns directories folded or swept.
     */
   def compactTopKCountLog(spark: SparkSession, logDir: String,
-                          upToBatch: Long): Int = {
-    val horizon = idfCompactionHorizon(logDir)
-    val batchesDir = java.nio.file.Paths.get(logDir, "batches")
-    def batchId(p: java.nio.file.Path): Option[Long] = {
-      val n = p.getFileName.toString
-      if (n.startsWith("batch=")) scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-      else None
-    }
-    val dirs = graft.util.FsUtil.listDir(batchesDir)(
-      _.flatMap(p => batchId(p).map(p -> _)).toSeq)
-    val stale = dirs.filter { case (_, id) => id >= 0 && id <= horizon }
-    val fold = dirs.filter { case (_, id) => id > horizon && id <= upToBatch }
-    if (fold.isEmpty && stale.isEmpty) return 0
-    val staging = s"$logDir/compact-stage"
-    if (fold.nonEmpty) {
-      spark.read.parquet(s"$logDir/batches")
-        .where((col("batch") > horizon && col("batch") <= upToBatch) ||
-          col("batch") === -1L)
-        .groupBy("day", "key").agg(sum(col("cnt")).as("cnt"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(staging)
-    }
-    (stale ++ fold).foreach { case (p, _) =>
-      graft.util.FsUtil.deleteRecursively(p)
-    }
-    if (fold.nonEmpty) {
-      graft.util.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(s"$logDir/batches/batch=-1"))
-      // the staged fold IS the new segment — promote it with one atomic
-      // rename (r18) instead of a second read-and-rewrite job; the staging
-      // dir was fully written before any delete, so the crash windows are
-      // unchanged (single-writer maintenance contract)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(s"$logDir/batches/batch=-1"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(logDir, "_compacted_up_to"),
-        math.max(horizon, upToBatch).toString)
-    }
-    spark.catalog.refreshByPath(s"$logDir/batches")
-    stale.length + fold.length
-  }
+                          upToBatch: Long): Int =
+    compactBatchLog(spark, logDir, s"$logDir/batches", s"$logDir/compact-stage", upToBatch)(
+      _.groupBy("day", "key").agg(sum(col("cnt")).as("cnt")))
 
   /** Streaming IDF-delta maintenance — the q8 scoring statistic kept
     * current by an APPEND-ONLY ingest stream, the way ES's IDF tracks
@@ -1277,63 +1238,70 @@ object EventStream {
     * then advances the horizon marker and deletes the folded directories
     * (stale sub-horizon replays are swept without re-folding).
     *
-    * Crash discipline (the ivfCompactSmallFiles rule): the folded segment
-    * stages OUTSIDE `batches/` first; a crash before the deletes leaves
-    * the log untouched, and a crash after them leaves the staging copy as
-    * the recovery source (re-run the final move). Single-writer
-    * maintenance op. `upToBatch` must lie BELOW the stream's committed
-    * checkpoint offset — the replay protection is the horizon filter plus
-    * the checkpoint's guarantee that a replayed batch id re-receives its
-    * original content. Returns the number of batch directories folded or
-    * swept.
+    * Crash discipline (the ivfCompactSmallFiles rule) is
+    * [[compactBatchLog]]'s. Single-writer maintenance op. `upToBatch` must
+    * lie BELOW the stream's committed checkpoint offset — the replay
+    * protection is the horizon filter plus the checkpoint's guarantee that
+    * a replayed batch id re-receives its original content. Returns the
+    * number of batch directories folded or swept.
     */
   def compactIdfDeltaLog(spark: SparkSession, deltaDir: String,
-                         upToBatch: Long): Int = {
-    val horizon = idfCompactionHorizon(deltaDir)
-    val batchesDir = java.nio.file.Paths.get(deltaDir, "batches")
-    def batchId(p: java.nio.file.Path): Option[Long] = {
-      val n = p.getFileName.toString
-      if (n.startsWith("batch=")) scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-      else None
-    }
-    val dirs = graft.util.FsUtil.listDir(batchesDir)(
-      _.flatMap(p => batchId(p).map(p -> _)).toSeq)
-    val stale = dirs.filter { case (_, id) => id >= 0 && id <= horizon }
-    val fold = dirs.filter { case (_, id) => id > horizon && id <= upToBatch }
-    if (fold.isEmpty && stale.isEmpty) return 0
-    val staging = s"$deltaDir/compact-stage"
-    if (fold.nonEmpty) {
-      val slice = spark.read.parquet(s"$deltaDir/batches")
-        .where((col("batch") > horizon && col("batch") <= upToBatch) ||
-          col("batch") === -1L)
+                         upToBatch: Long): Int =
+    compactBatchLog(spark, deltaDir, s"$deltaDir/batches", s"$deltaDir/compact-stage",
+        upToBatch) { slice =>
       // per-term membership sums; ONE row-count contribution per source
       // batch (d_n rides every term row of its batch — the batch axis
       // dedupes it), re-attached to every folded term row
       val dDf = slice.groupBy("term").agg(sum("d_df").as("d_df"))
       val dN = slice.select(col("batch"), col("d_n")).distinct()
         .agg(coalesce(sum("d_n"), lit(0L))).head.getLong(0)
-      dDf.withColumn("d_n", lit(dN)).coalesce(1)
-        .write.mode("overwrite").parquet(staging)
+      dDf.withColumn("d_n", lit(dN))
     }
-    (stale ++ fold).foreach { case (p, _) =>
+
+  /** The compaction skeleton shared by every `batch=<id>`-partitioned log:
+    * `fold` turns the slice — the compact segment (`batch=-1`) plus every
+    * batch in `(horizon, upToBatch]` — into the new compact segment's rows.
+    * The fold stages OUTSIDE the batch directory first; then the folded and
+    * stale sub-horizon batch directories are swept, the staged fold is
+    * promoted to `batch=-1` with one atomic rename (no second
+    * read-and-rewrite job), and the horizon marker advances. A crash before
+    * the deletes leaves the log untouched; after them the staging copy is
+    * the recovery source (re-run the final move). Single-writer maintenance
+    * op. Returns the number of batch directories folded or swept.
+    */
+  private def compactBatchLog(spark: SparkSession, logDir: String, batchesDir: String,
+                              staging: String, upToBatch: Long)(
+                              fold: DataFrame => DataFrame): Int = {
+    val horizon = idfCompactionHorizon(logDir)
+    def batchId(p: java.nio.file.Path): Option[Long] = {
+      val n = p.getFileName.toString
+      if (n.startsWith("batch=")) scala.util.Try(n.stripPrefix("batch=").toLong).toOption
+      else None
+    }
+    val dirs = graft.util.FsUtil.listDir(java.nio.file.Paths.get(batchesDir))(
+      _.flatMap(p => batchId(p).map(p -> _)).toSeq)
+    val stale = dirs.filter { case (_, id) => id >= 0 && id <= horizon }
+    val folded = dirs.filter { case (_, id) => id > horizon && id <= upToBatch }
+    if (folded.isEmpty && stale.isEmpty) return 0
+    if (folded.nonEmpty) {
+      fold(spark.read.parquet(batchesDir)
+          .where((col("batch") > horizon && col("batch") <= upToBatch) ||
+            col("batch") === -1L))
+        .coalesce(1).write.mode("overwrite").parquet(staging)
+    }
+    (stale ++ folded).foreach { case (p, _) =>
       graft.util.FsUtil.deleteRecursively(p)
     }
-    if (fold.nonEmpty) {
-      graft.util.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(s"$deltaDir/batches/batch=-1"))
-      // the staged fold IS the new segment — promote it with one atomic
-      // rename (r18) instead of a second read-and-rewrite job; the staging
-      // dir was fully written before any delete, so the crash windows are
-      // unchanged (single-writer maintenance contract)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(s"$deltaDir/batches/batch=-1"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(deltaDir, "_compacted_up_to"),
+    if (folded.nonEmpty) {
+      val segment = java.nio.file.Paths.get(batchesDir, "batch=-1")
+      graft.util.FsUtil.deleteRecursively(segment)
+      graft.store.Commit.promote(java.nio.file.Paths.get(staging), segment)
+      graft.store.Commit.writeAtomically(
+        java.nio.file.Paths.get(logDir, "_compacted_up_to"),
         math.max(horizon, upToBatch).toString)
     }
-    spark.catalog.refreshByPath(s"$deltaDir/batches")
-    stale.length + fold.length
+    spark.catalog.refreshByPath(batchesDir)
+    stale.length + folded.length
   }
 
   /** Compact a GENERIC per-key sum log — the e16 lifecycle for any delta
@@ -1344,54 +1312,16 @@ object EventStream {
     * compacted fold hash-matches the uncompacted fold — then advance the
     * horizon marker and sweep folded and stale directories. Same staging
     * crash rule, single-writer contract, and below-checkpoint `upToBatch`
-    * requirement as [[compactIdfDeltaLog]] (which stays bespoke for its
-    * per-batch `d_n` scalar, as does [[compactTopKCountLog]] for its
+    * requirement as [[compactIdfDeltaLog]] (whose fold stays bespoke for
+    * its per-batch `d_n` scalar, as does [[compactTopKCountLog]]'s for its
     * pruning semantics). Returns directories folded or swept.
     */
   def compactSumLog(spark: SparkSession, deltaDir: String, upToBatch: Long,
-                    keyCols: Seq[String], sumCols: Seq[String]): Int = {
-    val horizon = idfCompactionHorizon(deltaDir)
-    val batchesDir = java.nio.file.Paths.get(deltaDir, "batches")
-    def batchId(p: java.nio.file.Path): Option[Long] = {
-      val n = p.getFileName.toString
-      if (n.startsWith("batch=")) scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-      else None
-    }
-    val dirs = graft.util.FsUtil.listDir(batchesDir)(
-      _.flatMap(p => batchId(p).map(p -> _)).toSeq)
-    val stale = dirs.filter { case (_, id) => id >= 0 && id <= horizon }
-    val fold = dirs.filter { case (_, id) => id > horizon && id <= upToBatch }
-    if (fold.isEmpty && stale.isEmpty) return 0
-    val staging = s"$deltaDir/compact-stage"
-    if (fold.nonEmpty) {
-      spark.read.parquet(s"$deltaDir/batches")
-        .where((col("batch") > horizon && col("batch") <= upToBatch) ||
-          col("batch") === -1L)
-        .groupBy(keyCols.map(col): _*)
-        .agg(sum(sumCols.head).as(sumCols.head),
-          sumCols.tail.map(c => sum(c).as(c)): _*)
-        .coalesce(1).write.mode("overwrite").parquet(staging)
-    }
-    (stale ++ fold).foreach { case (p, _) =>
-      graft.util.FsUtil.deleteRecursively(p)
-    }
-    if (fold.nonEmpty) {
-      graft.util.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(s"$deltaDir/batches/batch=-1"))
-      // the staged fold IS the new segment — promote it with one atomic
-      // rename (r18) instead of a second read-and-rewrite job; the staging
-      // dir was fully written before any delete, so the crash windows are
-      // unchanged (single-writer maintenance contract)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(s"$deltaDir/batches/batch=-1"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(deltaDir, "_compacted_up_to"),
-        math.max(horizon, upToBatch).toString)
-    }
-    spark.catalog.refreshByPath(s"$deltaDir/batches")
-    stale.length + fold.length
-  }
+                    keyCols: Seq[String], sumCols: Seq[String]): Int =
+    compactBatchLog(spark, deltaDir, s"$deltaDir/batches", s"$deltaDir/compact-stage",
+        upToBatch)(
+      _.groupBy(keyCols.map(col): _*)
+        .agg(sum(sumCols.head).as(sumCols.head), sumCols.tail.map(c => sum(c).as(c)): _*))
 
   /** Horizon-aware read of a streamed signature index ([[streamSignatureIngest]]'s
     * layout: `batch=<id>/` dirs directly under the index root, base and
@@ -1419,47 +1349,9 @@ object EventStream {
     * Returns the number of directories folded or swept.
     */
   def compactSignatureIndexLog(spark: SparkSession, indexDir: String,
-                               upToBatch: Long): Int = {
-    val horizon = idfCompactionHorizon(indexDir)
-    val root = java.nio.file.Paths.get(indexDir)
-    def batchId(p: java.nio.file.Path): Option[Long] = {
-      val n = p.getFileName.toString
-      if (n.startsWith("batch=")) scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-      else None
-    }
-    val dirs = graft.util.FsUtil.listDir(root)(
-      _.flatMap(p => batchId(p).map(p -> _)).toSeq)
-    val stale = dirs.filter { case (_, id) => id >= 0 && id <= horizon }
-    val fold = dirs.filter { case (_, id) => id > horizon && id <= upToBatch }
-    if (fold.isEmpty && stale.isEmpty) return 0
-    val staging = s"$indexDir-compact-stage"
-    if (fold.nonEmpty) {
-      spark.read.parquet(indexDir)
-        .where((col("batch") > horizon && col("batch") <= upToBatch) ||
-          col("batch") === -1L)
-        .select("doc_id", "sig")
-        .coalesce(1).write.mode("overwrite").parquet(staging)
-    }
-    (stale ++ fold).foreach { case (p, _) =>
-      graft.util.FsUtil.deleteRecursively(p)
-    }
-    if (fold.nonEmpty) {
-      graft.util.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(s"$indexDir/batch=-1"))
-      // the staged fold IS the new segment — promote it with one atomic
-      // rename (r18) instead of a second read-and-rewrite job; the staging
-      // dir was fully written before any delete, so the crash windows are
-      // unchanged (single-writer maintenance contract)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(s"$indexDir/batch=-1"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(indexDir, "_compacted_up_to"),
-        math.max(horizon, upToBatch).toString)
-    }
-    spark.catalog.refreshByPath(indexDir)
-    stale.length + fold.length
-  }
+                               upToBatch: Long): Int =
+    compactBatchLog(spark, indexDir, indexDir, s"$indexDir-compact-stage", upToBatch)(
+      _.select("doc_id", "sig"))
 
   /** STREAMING drift-alarm maintenance — the PSI statistic (c8) kept
     * current BY INGEST: each arriving document micro-batch lands its own

@@ -23,6 +23,13 @@ object FsUtil {
     else if (Files.isRegularFile(p)) Files.size(p)
     else 0L
 
+  /** Recursive copy of a file or directory tree to a path that must not exist. */
+  def copyRecursively(src: Path, dst: Path): Unit = {
+    Files.copy(src, dst)
+    if (Files.isDirectory(src, java.nio.file.LinkOption.NOFOLLOW_LINKS))
+      listDir(src)(_.toSeq).foreach(p => copyRecursively(p, dst.resolve(p.getFileName.toString)))
+  }
+
   /** Depth-first recursive delete; missing paths are a no-op. */
   def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS))

@@ -23,14 +23,20 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     import graft.store.PairCommit
     val st = freshStore()
     Fixtures.corpus.take(5).foreach(st.upsert) // v1..v5
-    val root = Files.createTempDirectory("graft-pair").toString
-    val m0 = PairCommit.init(spark, root, st, 4)
+    val live = Files.createTempDirectory("graft-pair").toString
+    val m0 = PairCommit.init(spark, live, st, 4)
     m0 shouldBe PairCommit.Manifest(5L, 1L)
-    val gen1Files = graft.util.FsUtil.listDir(
-      java.nio.file.Paths.get(root, "hist", "gen-1"))(_.toSeq).toString
+    def gen1Files(root: String) = graft.util.FsUtil.listDir(
+      java.nio.file.Paths.get(root, "hist", "gen-1"))(_.map(_.getFileName.toString).toSeq.sorted)
+    val gen1Before = gen1Files(live)
     st.partialUpdate(Fixtures.corpus(1).id, Map("title" -> "rev-b")) // v6
-    // crash: gen-2 published, manifest NOT swapped
-    PairCommit.advance(spark, root, st, 4, crashBeforeSwap = true) shouldBe m0
+    // crash: gen-2 published, manifest NOT swapped — the pair root as copied
+    // just before the swap; the test goes on with the copy
+    val root = live + "-crashed"
+    graft.store.Commit.crashCopy(java.nio.file.Paths.get(live),
+        java.nio.file.Paths.get(root), "write MANIFEST") {
+      PairCommit.advance(spark, live, st, 4)
+    }
     PairCommit.manifest(root) shouldBe m0
     // pair reader: BOTH halves still resolve at the old instant — the
     // snapshot half shows the pre-update title and the history half has
@@ -42,8 +48,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     PairCommit.readHistory(spark, root)
       .where(col("valid_to").isNotNull).count() shouldBe 0L
     // gen-1 untouched by the crashed advance (immutability)
-    graft.util.FsUtil.listDir(
-      java.nio.file.Paths.get(root, "hist", "gen-1"))(_.toSeq).toString shouldBe gen1Files
+    gen1Files(root) shouldBe gen1Before
     // redo WITHOUT an explicit heal: the orphan generation is manifest-
     // invisible, so the redone advance replaces it in place
     val m1 = PairCommit.advance(spark, root, st, 4)
@@ -67,7 +72,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     import graft.store.PairCommit
     val st = freshStore()
     Fixtures.corpus.take(5).foreach(st.upsert) // v1..v5
-    val root = Files.createTempDirectory("graft-pair-rb").toString
+    var root = Files.createTempDirectory("graft-pair-rb").toString
     PairCommit.init(spark, root, st, 4)
     // three advances → four generations
     st.partialUpdate(Fixtures.corpus(1).id, Map("title" -> "rev-b")) // v6
@@ -77,7 +82,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     st.partialUpdate(Fixtures.corpus(1).id, Map("title" -> "rev-c")) // v8
     val m = PairCommit.advance(spark, root, st, 4)
     m shouldBe PairCommit.Manifest(8L, 4L)
-    val hd = java.nio.file.Paths.get(root, "hist")
+    def hd = java.nio.file.Paths.get(root, "hist")
     def gens(): Seq[String] = graft.util.FsUtil.listDir(hd)(
       _.map(_.getFileName.toString).filter(_.startsWith("gen-")).toSeq.sorted)
     gens() shouldBe Seq("gen-1", "gen-2", "gen-3", "gen-4")
@@ -85,8 +90,14 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
       .select("id", "title", "valid_from", "valid_to")
       .orderBy("id", "valid_from").collect().toSeq
     val bytesBefore = graft.util.FsUtil.sizeOf(hd)
-    // torn rebase: manifest unmoved, reader unaffected, one orphan
-    PairCommit.rebase(spark, root, 4, crashBeforeSwap = true) shouldBe m
+    // torn rebase: manifest unmoved, reader unaffected, one orphan — the
+    // pair root as copied just before the swap; the test goes on with it
+    val live = root
+    root = live + "-crashed"
+    graft.store.Commit.crashCopy(java.nio.file.Paths.get(live),
+        java.nio.file.Paths.get(root), "write MANIFEST") {
+      PairCommit.rebase(spark, live, 4)
+    }
     PairCommit.manifest(root) shouldBe m
     PairCommit.readHistory(spark, root)
       .select("id", "title", "valid_from", "valid_to")
@@ -458,6 +469,21 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     val rejected = st.bulkLoad(spark.createDataset(Fixtures.corpus :+ bad))
     rejected.collect().map(_.id).toSeq shouldBe Seq("bad")
     st.current.count() shouldBe 10
+  }
+
+  test("S6 bulk load: a batch that throws mid-write commits nothing and leaves no staging") {
+    val dir = Files.createTempDirectory("graft-store-bulkfail")
+    val st = new MetadataStore(spark, dir.toString, fixedClock)
+    st.upsert(e0)
+    val v = st.committedVersion
+    val poison = Fixtures.corpus(3).id
+    val failing = spark.createDataset(Fixtures.corpus.drop(1)).map { x =>
+      if (x.id == poison) throw new IllegalStateException("source failed") else x
+    }
+    intercept[Exception](st.bulkLoad(failing))
+    st.committedVersion shouldBe v
+    graft.util.FsUtil.listDir(dir)(_.map(_.getFileName.toString)
+      .filter(_.startsWith(".staging-")).toSeq) shouldBe empty
   }
 
   test("S7 drop empties the table; subsequent upserts work") {
