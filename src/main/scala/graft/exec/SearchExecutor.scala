@@ -3,11 +3,16 @@ package graft.exec
 import graft.compile.{CompiledQuery, QueryCompiler}
 import graft.model._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Executes a CompiledQuery with the reference's facet/post-filter interplay
-  * (SURVEY.md §2.3): two plan branches off one shared `base`:
+  * (SURVEY.md §2.3), off one `base` plan:
   *
   *   base   = scan.where(queryFilter [&& score > 0])      — hits AND facets
   *   facets = base.groupBy(dim).count.top(N)              — post filter NOT applied
@@ -15,11 +20,11 @@ import org.apache.spark.storage.StorageLevel
   *   total  = base.where(postFilter).count                — ES hits.total counts the
   *                                                          post-filtered set
   *
-  * `base` is cached across the branches (the reference gets this for free as a
-  * single ES `post_filter` pass; here it is an explicit one-materialization
-  * reuse). At catalog scale the cache is in-memory columnar; at 100 TB the
-  * same two-branch plan holds — base becomes a parquet scan with the query
-  * filter pushed down, and the facet branch is a partial+final hash aggregate.
+  * [[search]] answers all four in ONE pass over `base`, one Spark job — the
+  * shape of the reference's single ES request (query + `post_filter` + two
+  * terms aggregations, query_translation.py:30-55). At 100 TB the same pass
+  * holds: base is a parquet scan with the query filter pushed down, and
+  * each task ships only its counts and its top `from + size` rows.
   *
   * Ordering: relevance desc (ES default, implicit in reference search.py:108-112),
   * tie-broken by id for determinism (tie order is unspecified in the
@@ -49,32 +54,6 @@ object SearchExecutor {
       .orderBy(col("count").desc, col(dim).asc)
       .limit(topN)
 
-  /** Both facet dimensions in ONE aggregation job: GROUPING SETS
-    * ((category), (format)) expands each base row into one record per
-    * grouping set before a single partial+final hash aggregate, and a
-    * window over the (already tiny) aggregated frame applies the per-set
-    * top-N cut. Versus two [[facetBranch]] jobs this halves the facet
-    * passes over `base` — at 100 TB, one fewer full scan/cache read per
-    * search request. Returns (gid, key, cnt) rows already rank-filtered;
-    * gid 1 = category set, gid 2 = format set (grouping_id bit per
-    * MISSING column, category first).
-    */
-  def facetsBranch(base: DataFrame): DataFrame = {
-    val agg = base.groupingSets(
-        Seq(Seq(col("category")), Seq(col("format"))),
-        col("category"), col("format"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"),
-        grouping_id().cast("int").as("gid"))
-      .withColumn("key", coalesce(col("category"), col("format")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("gid"))
-      .orderBy(col("cnt").desc, col("key").asc)
-    agg.withColumn("rank", row_number().over(w))
-      .where((col("gid") === 1 && col("rank") <= CategoryFacetSize) ||
-             (col("gid") === 2 && col("rank") <= FormatFacetSize))
-      .select("gid", "key", "cnt", "rank")
-  }
-
   /** Hits branch: post filter, relevance order, offset/limit pagination
     * (Q2/Q3). Catalyst plans orderBy+limit as TakeOrderedAndProject — no
     * full sort.
@@ -85,43 +64,59 @@ object SearchExecutor {
       .offset(cq.from)
       .limit(cq.size)
 
-  /** Full search → SearchResult (reference response shape, search.py:121-135).
-    *
-    * Three jobs, not four: `total` rides the hits job as an `observe()`
-    * metric — a CollectMetrics node between the post filter and the
-    * TakeOrdered sees every post-filtered row exactly once (the top-k runs
-    * above it), so the count is exact and costs no extra pass. The
-    * `size == 0` degenerate case falls back to a count: a `limit(0)` plan
-    * folds to an empty relation, the metrics node never executes, and the
-    * observation would block forever.
+  /** Full search → SearchResult (reference response shape, search.py:121-135)
+    * in one job. Each partition of `base` returns a partial: its
+    * post-filtered row count, its category and format counts (over `base`:
+    * facets ignore the post filter), and its top `from + size`
+    * post-filtered rows by (score desc, id asc). The driver adds the counts
+    * and merges the top-k lists as TakeOrderedAndProjectExec does, then
+    * skips `from`. Facet keys stay UTF8String, so count ties break in
+    * Spark's binary UTF-8 order, as [[facetBranch]]'s sort does. Nothing is
+    * cached or observed: a plan Spark runs twice (a global Sort's sampling
+    * job) cannot inflate `total`.
     */
   def search(spark: SparkSession, ds: Dataset[MetadataEntry], cq: CompiledQuery): SearchResult = {
-    import spark.implicits._
-    val base = baseBranch(ds.toDF(), cq)
-    base.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val postFiltered = base.where(cq.postFilter)
-      val (hits, total) =
-        if (cq.size == 0) (Seq.empty[MetadataEntry], postFiltered.count())
-        else {
-          val obs = org.apache.spark.sql.Observation()
-          val collected = postFiltered
-            .observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("total"))
-            .orderBy(col(ScoreCol).desc, col("id").asc)
-            .offset(cq.from)
-            .limit(cq.size)
-            .drop(ScoreCol).as[MetadataEntry].collect().toSeq
-          (collected, obs.get("total").asInstanceOf[Long])
+    require(cq.from >= 0 && cq.size >= 0, s"from ${cq.from} and size ${cq.size} must be >= 0")
+    val k = math.min(cq.from.toLong + cq.size, Int.MaxValue).toInt
+    val frame = baseBranch(ds.toDF(), cq).withColumn("_post", coalesce(cq.postFilter, lit(false)))
+    val schema = frame.schema
+    def at(c: String) = BoundReference(schema.fieldIndex(c), schema(c).dataType, nullable = true)
+    val rank = new LazilyGeneratedOrdering(
+      Seq(SortOrder(at(ScoreCol), Descending), SortOrder(at("id"), Ascending)))
+    val Seq(cat, fmt, post) = Seq("category", "format", "_post").map(schema.fieldIndex)
+    val parts = frame.queryExecution.toRdd.mapPartitions { rows =>
+      val top = new java.util.PriorityQueue[InternalRow](rank.reverse)
+      val (cats, fmts) = (new Counts, new Counts)
+      var total = 0L
+      rows.foreach { r =>
+        bump(cats, r.getUTF8String(cat))
+        bump(fmts, r.getUTF8String(fmt))
+        if (r.getBoolean(post)) {
+          total += 1
+          if (k > 0 && (top.size < k || rank.lt(r, top.peek))) {
+            top.add(r.copy())
+            if (top.size > k) top.poll()
+          }
         }
-      // one job for BOTH facet dimensions (grouping-sets expand)
-      val facetRows = facetsBranch(base)
-        .select("gid", "key", "rank").collect()
-      def keysOf(gid: Int): Seq[String] = facetRows.iterator
-        .filter(_.getInt(0) == gid)
-        .toSeq.sortBy(_.getInt(2)).map(_.getString(1))
-      SearchResult(hits, total, keysOf(1), keysOf(2))
-    } finally base.unpersist()
+      }
+      Iterator((total, cats, fmts, top.toArray(Array.empty[InternalRow])))
+    }.collect()
+    val toEntry = ExpressionEncoder[MetadataEntry]()
+      .resolveAndBind(frame.queryExecution.analyzed.output).createDeserializer()
+    val hits = parts.flatMap(_._4).sorted(rank).slice(cq.from, k).map(toEntry).toSeq
+    def facet(counts: Array[Counts], n: Int): Seq[String] =
+      counts.flatMap(_.asScala).groupMapReduce(_._1)(_._2.longValue)(_ + _).toSeq
+        .sortBy { case (key, c) => (-c, key) }.take(n).map(_._1.toString)
+    SearchResult(hits, parts.map(_._1).sum,
+      facet(parts.map(_._2), CategoryFacetSize), facet(parts.map(_._3), FormatFacetSize))
   }
+
+  private type Counts = java.util.HashMap[UTF8String, java.lang.Long]
+
+  /** Count a row under `key`, copied only on first insert: the row's
+    * UTF8String points into a buffer the scan reuses. */
+  private def bump(m: Counts, key: UTF8String): Unit =
+    if (m.containsKey(key)) m.put(key, m.get(key) + 1) else m.put(key.clone(), 1L)
 
   /** Convenience: raw DSL string + ACL → SearchResult (the reference's
     * `DataSetSearch.search(query, orgs, filtering, isAdmin)` signature,

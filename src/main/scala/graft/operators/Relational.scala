@@ -372,8 +372,7 @@ object Relational {
     * axes without the nation×year detail grid pays for rows it throws
     * away under either). Same single-Expand execution as o6/o7 — each
     * row replicated once per listed set into one map-side-combining
-    * aggregate, one shuffle for both axes (exactly the facetsBranch
-    * grouping-sets trick at OLAP scale) — but the Expand factor is
+    * aggregate, one shuffle for both axes — but the Expand factor is
     * |sets| = 2, not rollup's 3 or cube's 4. Nulls mark the other axis;
     * NULLS FIRST ordering pinned on both engines.
     */

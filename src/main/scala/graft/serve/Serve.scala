@@ -3,7 +3,7 @@ package graft.serve
 import graft.compile.QueryCompiler
 import graft.exec.SearchExecutor
 import graft.model.{AclContext, MetadataEntry, SearchResult}
-import graft.store.MetadataStore
+import graft.store.{MetadataStore, Validation}
 import org.apache.spark.sql.SparkSession
 
 /** The thin serving shell around the Spark core — the reference's service
@@ -138,17 +138,18 @@ final class CatalogService(spark: SparkSession, store: MetadataStore,
     * applied — the reference calls delete_public_from_hive with the
     * current entry whenever 'isPublic' is in the request body
     * (reference: metadata_entry.py:245-247, dataset_delete.py:50-63).
+    * One read, up front: the notification goes to the merged entry's org.
     */
-  def post(id: String, fields: Map[String, Any]): Boolean = {
-    if (fields.contains("isPublic"))
-      store.get(id).foreach(cascade.dropPublicView)
-    val updated = store.partialUpdate(id, fields)
-    if (updated) {
-      notifier.notify(store.get(id).map(_.orgUUID).getOrElse(""), s"Dataset $id updated")
-      afterMutation()
+  def post(id: String, fields: Map[String, Any]): Boolean =
+    store.get(id).exists { existing =>
+      if (fields.contains("isPublic")) cascade.dropPublicView(existing)
+      val updated = store.partialUpdate(id, fields)
+      if (updated) {
+        notifier.notify(Validation.merge(existing, fields).orgUUID, s"Dataset $id updated")
+        afterMutation()
+      }
+      updated
     }
-    updated
-  }
 
   /** DELETE /rest/datasets/{id} — tombstone + cascade + notify
     * (reference: metadata_entry.py:191-214, dataset_delete.py:31-48).

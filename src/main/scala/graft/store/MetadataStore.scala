@@ -22,7 +22,8 @@ import scala.jdk.CollectionConverters._
   *
   * Read path (merge-on-read): newest base ≤ CURRENT, plus every delta in
   * (baseVersion, CURRENT], latest row per id wins
-  * (row_number over id / _version desc), tombstones drop out. Mutations are
+  * (row_number over id / _version desc), tombstones drop out; with no delta
+  * the id-unique base is read alone (see [[resolved]]). Mutations are
   * O(delta) writes — never a snapshot rewrite — and the atomic pointer swap
   * gives the same read-your-writes guarantee the reference buys with an
   * explicit ES index flush (reference: bases.py:81-82). Periodic `compact()`
@@ -303,6 +304,10 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * only the row groups whose id-range matches instead of windowing the
     * whole log (the round-2 scale-killer). `lookupId` additionally prunes a
     * hash-bucketed base down to ONE partition directory (see [[compact]]).
+    * With no delta in the window the base is read as it is (no window, no
+    * exchange), by the base-uniqueness invariant: a base is an id-unique,
+    * tombstone-free snapshot. Its only writers keep it — [[compact]] (a
+    * resolved snapshot), [[drop]] (empty), [[redactIds]] (only removes rows).
     */
   private def resolved(prune: Option[org.apache.spark.sql.Column],
                        lookupId: Option[String] = None,
@@ -320,9 +325,10 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     val logAll = (base.toSeq ++ deltas).reduceOption(_ unionByName _).getOrElse(emptyLog)
     val log = prune.fold(logAll)(logAll.where)
     val latest = Window.partitionBy(col("id")).orderBy(col(VersionCol).desc)
-    val cur = log.withColumn("_rn", row_number().over(latest))
-      .where(col("_rn") === 1 && col(OpCol) =!= "delete")
-      .drop("_rn", OpCol)
+    val cur = if (deltas.isEmpty) log.drop(OpCol) // a base alone is already resolved
+      else log.withColumn("_rn", row_number().over(latest))
+        .where(col("_rn") === 1 && col(OpCol) =!= "delete")
+        .drop("_rn", OpCol)
     if (keepVersion) cur else cur.drop(VersionCol)
   }
 
@@ -352,10 +358,8 @@ class MetadataStore(spark: SparkSession, rootDir: String,
       MetadataSchema.structType
         .add(VersionCol, "long").add(OpCol, "string"))
 
-  /** S2 point lookup; None = the reference's 404
-    * (reference: metadata_entry.py:127-147, bases.py:51-63).
-    */
-  /** The id-pruned lookup plan (exposed for plan-shape assertions). On a
+  /** S2 point lookup plan (reference: metadata_entry.py:127-147,
+    * bases.py:51-63), exposed for plan-shape assertions. On a
     * bucketed store the base scan additionally prunes to the id's single
     * `_bucket=` partition directory.
     */

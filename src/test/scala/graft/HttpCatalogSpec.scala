@@ -56,8 +56,8 @@ class HttpCatalogSpec extends AnyFunSuite with Matchers with SparkSupport
   }
 
   private def req(method: String, path: String, token: Option[String] = Some("tok-admin"),
-                  body: Option[String] = None): HttpResponse[String] = {
-    val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+                  body: Option[String] = None, at: Int = port): HttpResponse[String] = {
+    val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$at$path"))
     token.foreach(t => b.header("Authorization", s"bearer $t"))
     val withMethod = body match {
       case Some(s) => b.method(method, HttpRequest.BodyPublishers.ofString(s))
@@ -233,6 +233,69 @@ class HttpCatalogSpec extends AnyFunSuite with Matchers with SparkSupport
       req2("DELETE", "tok-admin").statusCode() shouldBe 200
       store2.current.count() shouldBe 0L
     } finally http2.stop()
+  }
+
+  test("read-your-writes: PUT, POST and DELETE show in the very next search and count") {
+    // isolated server on a compacted store; the second round runs after
+    // another compact(), so reads go through both the base-only resolve
+    // (before each round's first write) and the delta resolve (after it)
+    val store3 = new MetadataStore(spark,
+      Files.createTempDirectory("graft-http-ryw").toString,
+      () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00"))
+    import spark.implicits._
+    store3.bulkLoad(spark.createDataset(Fixtures.corpus))
+    store3.compact()
+    val http3 = new HttpCatalog(new CatalogService(spark, store3), verifier,
+      p => memberships(p.userId))
+    val at = http3.start()
+    try {
+      def search(fmt: String, token: String) = json(req("GET",
+        s"/rest/datasets?query=${enc(s"""{"filters":[{"format":["$fmt"]}]}""")}",
+        token = Some(token), at = at))
+      def count(token: String) = req("GET", "/rest/datasets/count", token = Some(token), at = at)
+        .body().toLong
+      def keys(n: com.fasterxml.jackson.databind.JsonNode, field: String) =
+        (0 until n.get(field).size).map(n.get(field).get(_).asText)
+      for (round <- 1 to 2) {
+        if (round == 2) store3.compact()
+        val (id, cat, fmt) = (s"ryw$round", s"rywcat$round", s"rywfmt$round")
+        val (admin0, org03) = (count("tok-admin"), count("tok-org03"))
+        val entry =
+          s"""{"category":"$cat","dataSample":"A,B","format":"$fmt","isPublic":false,
+             |"orgUUID":"org01","recordCount":5,"size":10,
+             |"sourceUri":"http://x.example.com/s",
+             |"targetUri":"hdfs://nameservice1/org/db42/x","title":"ryw"}""".stripMargin
+        withClue(s"round $round PUT: ") {
+          req("PUT", s"/rest/datasets/$id", token = Some("tok-org01"), body = Some(entry), at = at)
+            .statusCode() shouldBe 201
+          val r = search(fmt, "tok-admin")
+          r.get("total").asLong shouldBe 1L
+          r.get("hits").get(0).get("title").asText shouldBe "ryw"
+          keys(r, "categories") should contain(cat)
+          keys(r, "formats") should contain(fmt)
+          count("tok-admin") shouldBe admin0 + 1
+          search(fmt, "tok-org03").get("total").asLong shouldBe 0L
+          count("tok-org03") shouldBe org03
+        }
+        withClue(s"round $round POST isPublic: ") {
+          req("POST", s"/rest/datasets/$id", token = Some("tok-org01"),
+            body = Some("""{"isPublic":true}"""), at = at).statusCode() shouldBe 200
+          search(fmt, "tok-org03").get("total").asLong shouldBe 1L
+          count("tok-org03") shouldBe org03 + 1
+        }
+        withClue(s"round $round DELETE: ") {
+          req("DELETE", s"/rest/datasets/$id", token = Some("tok-org01"), at = at)
+            .statusCode() shouldBe 200
+          val r = search(fmt, "tok-admin")
+          r.get("total").asLong shouldBe 0L
+          keys(r, "formats") should not contain fmt
+          keys(r, "categories") should not contain cat
+          count("tok-admin") shouldBe admin0
+          count("tok-org03") shouldBe org03
+          req("GET", s"/rest/datasets/$id", at = at).statusCode() shouldBe 404
+        }
+      }
+    } finally http3.stop()
   }
 
   test("DELETE: 200 with cascade status, then 404; foreign org 403") {

@@ -160,6 +160,42 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
     plan should include("Window")
   }
 
+  test("compacted store: current and point lookup are plain base scans (no Window, no Exchange)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-compacted").toString
+    val st = new graft.store.MetadataStore(spark, dir,
+      () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00"))
+    st.bulkLoad(spark.createDataset(Fixtures.corpus))
+    Fixtures.corpus.take(3).foreach(st.upsert)
+    st.compact()
+    for ((name, plan) <- Seq(
+        "current" -> st.current.queryExecution.executedPlan.toString,
+        "lookup" -> st.lookup("5").queryExecution.executedPlan.toString))
+      withClue(s"$name: $plan") {
+        plan should not include "Window"
+        plan should not include "Exchange"
+        plan should include("FileScan parquet")
+      }
+    st.get("5") shouldBe Some(Fixtures.corpus(5))
+  }
+
+  test("search over a multi-file parquet input runs one job and caches nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-onejob").toString + "/t"
+    spark.createDataset(Fixtures.corpus).repartition(4).write.parquet(dir)
+    val input = spark.read.parquet(dir).as[graft.model.MetadataEntry]
+    input.rdd.getNumPartitions should be > 1
+    val cq = QueryCompiler.compile(QueryCompiler.parse(
+      """{"query":"disease","filters":[{"format":["csv"]}],"from":1,"size":5}"""),
+      AclContext(Nil, isAdmin = true))
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val group = s"planaudit-search-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "one search")
+    val r = try SearchExecutor.search(spark, input, cq) finally sc.clearJobGroup()
+    (r.total, r.hits.size) shouldBe ((2L, 1))
+    sc.statusTracker.getJobIdsForGroup(group) should have length 1
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+  }
+
   test("bucketed base: point lookup prunes to one _bucket partition directory") {
     val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-bucketed").toString
     val st = new graft.store.MetadataStore(spark, dir,

@@ -36,22 +36,73 @@ class SearchExecutorSpec extends AnyFunSuite with Matchers with SparkSupport {
     r.formats shouldBe Seq("csv", "json")
   }
 
-  test("single-job facets (grouping sets) equal the per-dimension facet branches") {
-    val cq = QueryCompiler.compile(QueryCompiler.parse("{}"), admin)
-    val base = SearchExecutor.baseBranch(ds.toDF(), cq)
-    val combined = SearchExecutor.facetsBranch(base)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getInt(3)))
-    def keys(gid: Int) = combined.filter(_._1 == gid).sortBy(_._4).map(_._2).toSeq
-    val cats = SearchExecutor.facetBranch(base, "category", SearchExecutor.CategoryFacetSize)
-      .select("category").as[String].collect().toSeq
-    val fmts = SearchExecutor.facetBranch(base, "format", SearchExecutor.FormatFacetSize)
-      .select("format").as[String].collect().toSeq
-    keys(1) shouldBe cats
-    keys(2) shouldBe fmts
-    // counts survive the expand: spot-check a known bucket
-    combined.filter(r => r._1 == 2 && r._2 == "csv").head._3 shouldBe 8L
-    // single aggregation job: the plan carries the grouping-set Expand
-    SearchExecutor.facetsBranch(base).queryExecution.executedPlan.toString should include("Expand")
+  /** The fixture as a multi-file parquet table: several scan partitions,
+    * so the per-partition partials really merge.
+    */
+  private lazy val multiPartition = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-search-parts").toString + "/t"
+    ds.repartition(4).write.parquet(dir)
+    val df = spark.read.parquet(dir).as[MetadataEntry]
+    df.rdd.getNumPartitions should be > 1
+    df
+  }
+
+  test("search's facet lists equal the per-dimension facetBranch top-N") {
+    for ((input, name) <- Seq(ds -> "local", multiPartition -> "multi-partition");
+         dsl <- Seq("{}", """{"query":"prices"}""", """{"filters":[{"format":["csv"]}]}""")) {
+      val cq = QueryCompiler.compile(QueryCompiler.parse(dsl), admin)
+      val base = SearchExecutor.baseBranch(input.toDF(), cq)
+      def top(dim: String, n: Int) =
+        SearchExecutor.facetBranch(base, dim, n).select(dim).as[String].collect().toSeq
+      val r = SearchExecutor.search(spark, input, cq)
+      withClue(s"$name $dsl: ") {
+        r.categories shouldBe top("category", SearchExecutor.CategoryFacetSize)
+        r.formats shouldBe top("format", SearchExecutor.FormatFacetSize)
+      }
+    }
+  }
+
+  test("A3 exact on an input no larger than from + size, local and multi-partition") {
+    // on a LocalRelation this small the page plans as a global Sort, whose
+    // range-partition sampling job runs the plan a second time: totals and
+    // facets must come from the one pass, never from a metric of the plan
+    for (input <- Seq(ds, multiPartition); page <- Seq("\"size\":20", "\"from\":5,\"size\":5")) {
+      val r = SearchExecutor.search(spark, input,
+        s"""{"filters":[{"format":["csv"]}],$page}""", admin)
+      withClue(page) {
+        r.total shouldBe 8
+        r.formats shouldBe Seq("csv", "json")
+        r.categories.toSet shouldBe Fixtures.corpus.map(_.category).toSet
+      }
+      val csv = Fixtures.corpus.filter(_.format == "csv").map(_.id)
+      if (page.startsWith("\"size")) r.hits.map(_.id) shouldBe csv
+      else r.hits.map(_.id) shouldBe csv.slice(5, 8)
+    }
+  }
+
+  test("facet count ties break by key in binary UTF-8 order, not UTF-16") {
+    // U+FF61 is EF BD A1 in UTF-8 and 0xFF61 in UTF-16; U+1F600 is
+    // F0 9F 98 80 and the surrogate pair D83D DE00: the two orders disagree
+    val (halfwidth, emoji) = ("\uFF61", "\uD83D\uDE00")
+    emoji.compareTo(halfwidth) should be < 0
+    val tied = spark.createDataset(Seq(
+      Fixtures.corpus(0).copy(id = "a", category = emoji, format = halfwidth),
+      Fixtures.corpus(1).copy(id = "b", category = halfwidth, format = emoji)))
+    val r = SearchExecutor.search(spark, tied, "{}", admin)
+    r.categories shouldBe Seq(halfwidth, emoji)
+    r.formats shouldBe Seq(halfwidth, emoji)
+    val base = SearchExecutor.baseBranch(tied.toDF(), QueryCompiler.compile(QueryCompiler.parse("{}"), admin))
+    SearchExecutor.facetBranch(base, "category", 10).select("category").as[String].collect()
+      .toSeq shouldBe r.categories
+  }
+
+  test("size 0 returns no hits with the exact total and facets; negative paging is rejected") {
+    val r = SearchExecutor.search(spark, ds, """{"size":0,"filters":[{"format":["csv"]}]}""", admin)
+    r.hits shouldBe empty
+    r.total shouldBe 8
+    r.formats shouldBe Seq("csv", "json")
+    an[IllegalArgumentException] should be thrownBy
+      SearchExecutor.search(spark, ds, """{"from":-1}""", admin)
   }
 
   test("A4 count endpoint = post-filtered total of an empty search") {

@@ -44,6 +44,15 @@ class ServeSpec extends AnyFunSuite with Matchers with SparkSupport {
     n.events should have size 2 // put + successful post, no ghost event
   }
 
+  test("a post that changes orgUUID notifies the new org") {
+    val (svc, n, _) = service()
+    svc.put(e0)
+    svc.post(e0.id, Map("orgUUID" -> "org99", "isPublic" -> false)) shouldBe true
+    val last = n.events.last
+    (last.orgGuid, last.message) shouldBe (("org99", s"Dataset ${e0.id} updated"))
+    svc.get(e0.id).get.orgUUID shouldBe "org99"
+  }
+
   test("notifications carry the injected clock's timestamp in wire order") {
     // reference: notifier.py:56-63 — {OrgGuid, Message, Timestamp} stamped
     // by the notifier at publish time with an epoch-ms clock.
